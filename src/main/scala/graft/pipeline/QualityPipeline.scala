@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 import graft.model.{AnnotatedPage, Page, Thresholds}
 import graft.stages.{HeuristicsScalar, LangIdModel, PerplexityModel, ScrubScalar}
@@ -23,32 +22,14 @@ final case class PipeRow(
     lang: String
 )
 
-/** C5 — per-stage metric accumulators (reference analogue: per-shard
-  * progress prints, `fineweb/big_inference.py:228-232`); checkpointed into
-  * the lineage table by `graft.lineage.Lineage`.
-  *
-  * SEMANTICS: the accumulators are updated inside a `mapPartitions`
-  * TRANSFORMATION, so Spark guarantees only at-least-once counting — task
-  * retries, speculative execution, or running two actions over the same
-  * annotated Dataset inflate the counts. They are progress telemetry, not
-  * ledger numbers; the authoritative per-chunk counts are derived from the
-  * written output (see [[graft.lineage.ResumableRunner]]).
-  */
-final class PipelineMetrics(spark: SparkSession) extends Serializable {
-  val docsIn: LongAccumulator = spark.sparkContext.longAccumulator("graft.docsIn")
-  val docsKept: LongAccumulator = spark.sparkContext.longAccumulator("graft.docsKept")
-  val docsPii: LongAccumulator = spark.sparkContext.longAccumulator("graft.docsPii")
-  val docsToxic: LongAccumulator = spark.sparkContext.longAccumulator("graft.docsToxic")
-}
-
 /** The flagship quality pipeline (north rule): langid (N1) + perplexity (N2)
   * + Gopher/C4 heuristics (N3) + PII/toxicity scrub (N4) + keep/drop (N5)
   * over Common-Crawl-style pages.
   *
-  * Physical shape (see SURVEY.md §4.3): one shuffle-free
-  * WholeStageCodegen span (heuristics + scrub, pure expressions) feeding one
-  * batched `mapPartitions` (langid + perplexity fused — a single pass, one
-  * broadcast deref per partition), then the only shuffle: a salted
+  * Physical shape (see SURVEY.md §4.3): a column-pruned projection feeding
+  * one shuffle-free batched `mapPartitions` in which scrub, heuristics,
+  * langid and perplexity run as scalar kernels, row by row (one broadcast
+  * deref per partition), then the only shuffle: a salted
   * repartition before the partitioned write (skewed-host handling).
   */
 object QualityPipeline {
@@ -82,8 +63,8 @@ object QualityPipeline {
       nSlurs <= th.maxSlurs
 
   /** Full annotation: Dataset[Page] → Dataset[AnnotatedPage]. No shuffle. */
-  def annotate(pages: Dataset[Page], th: Thresholds = Thresholds.default,
-      metrics: Option[PipelineMetrics] = None): Dataset[AnnotatedPage] = {
+  def annotate(pages: Dataset[Page],
+      th: Thresholds = Thresholds.default): Dataset[AnnotatedPage] = {
     val spark = pages.sparkSession
     import spark.implicits._
 
@@ -108,12 +89,6 @@ object QualityPipeline {
           val keep = decide(th, pred, ronConf, ppl, h.docLenWords,
             h.meanWordLen, h.symbolWordRatio, h.stopwordFrac,
             h.dupLineFrac, s.nSlurs)
-          metrics.foreach { m =>
-            m.docsIn.add(1)
-            if (keep) m.docsKept.add(1)
-            if (s.nEmails + s.nPhones + s.nCnps > 0) m.docsPii.add(1)
-            if (s.nSlurs > 0) m.docsToxic.add(1)
-          }
           AnnotatedPage(r.url, r.warc_ts, r.crawl_snapshot, r.lang,
             pred, ronConf, ppl, h.docLenWords, h.meanWordLen,
             h.symbolWordRatio, h.stopwordFrac, h.dupLineFrac,
@@ -143,9 +118,8 @@ object QualityPipeline {
   /** annotate + keep-only + write, end-to-end. */
   def run(pages: Dataset[Page], outPath: String,
       th: Thresholds = Thresholds.default,
-      metrics: Option[PipelineMetrics] = None,
       keepOnly: Boolean = false, saltBuckets: Int = 32): Unit = {
-    val annotated = annotate(pages, th, metrics)
+    val annotated = annotate(pages, th)
     val out = if (keepOnly) annotated.filter(_.keep) else annotated
     writeAnnotated(out, outPath, saltBuckets)
   }

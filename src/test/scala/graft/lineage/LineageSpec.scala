@@ -1,10 +1,23 @@
 package graft.lineage
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.{Success, TaskContext, TestBus}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.XxHash64
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, MapPartitions}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.command.DataWritingCommand
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.model.Page
 import graft.synth.SynthPages
 
 /** C1 resume semantics (FIXTURES.md `resume` family): kill after K waves,
@@ -12,6 +25,32 @@ import graft.synth.SynthPages
   */
 class LineageSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** Runs `body` with `l` listening, and returns once every event that
+    * `body` posted has reached `l`.
+    */
+  private def listening[T](l: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    TestBus.drain(sc)
+    sc.addSparkListener(l)
+    try { val r = body; TestBus.drain(sc); r }
+    finally sc.removeSparkListener(l)
+  }
+
+  /** Spark jobs that `body` submits from this thread. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (key, tag) = ("graft.test.scope", java.util.UUID.randomUUID().toString)
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          jobs.incrementAndGet()
+    }
+    sc.setLocalProperty(key, tag)
+    try listening(l)(body) finally sc.setLocalProperty(key, null)
+    jobs.get
+  }
 
   test("killed run resumes at partition granularity; output equals single run") {
     val base = Files.createTempDirectory("graft_lineage").toString
@@ -44,7 +83,6 @@ class LineageSpec extends AnyFunSuite {
     assert(rows.map(_.docs_in).sum == 1200L)
 
     // final output byte-equals the uninterrupted golden run
-    import org.apache.spark.sql.functions.col
     val out = spark.read.parquet(s"$base/out").drop("chunk_id")
       .orderBy(col("url")).collect()
     val golden = spark.read.parquet(s"$base/golden").drop("chunk_id")
@@ -54,32 +92,130 @@ class LineageSpec extends AnyFunSuite {
 
   test("each wave scores ONLY its own chunks (no per-wave full-corpus rescan)") {
     val base = Files.createTempDirectory("graft_lineage3").toString
-    val nDocs = 800L
-    val pages = SynthPages.pages(spark, nDocs)
+    val pages = SynthPages.pages(spark, 800L)
 
-    // full run over 4 waves: every doc must be scored exactly once in total —
-    // the old shape (annotate before the chunk filter) scored nDocs × waves
-    val m1 = new graft.pipeline.PipelineMetrics(spark)
-    ResumableRunner.run(pages, s"$base/out", s"$base/lin", "scan1",
-      numChunks = 8, waveSize = 2, metrics = Some(m1))
-    assert(m1.docsIn.value == nDocs,
-      s"scored ${m1.docsIn.value} docs across waves, expected $nDocs (one pass)")
-
-    // resume after 1 completed wave: only the REMAINING chunks' docs are
-    // scored, not the whole corpus again
-    val base2 = Files.createTempDirectory("graft_lineage4").toString
-    intercept[SimulatedFailure] {
-      ResumableRunner.run(pages, s"$base2/out", s"$base2/lin", "scan2",
-        numChunks = 8, waveSize = 2, failAfterWaves = Some(1))
+    // the optimized plan of every wave's write: scoring the full corpus per
+    // wave (annotate BELOW the chunk filter) would be O(waves × corpus)
+    val plans = ArrayBuffer.empty[LogicalPlan]
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        qe.optimizedPlan.foreach {
+          case w: DataWritingCommand => plans.synchronized(plans += w.query)
+          case _ =>
+        }
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    val store = new LineageStore(spark, s"$base2/lin")
-    val doneDocs = store.all().collect()
-      .filter(_.run_id == "scan2").map(_.docs_in).sum
-    val m2 = new graft.pipeline.PipelineMetrics(spark)
-    ResumableRunner.run(pages, s"$base2/out", s"$base2/lin", "scan2",
-      numChunks = 8, waveSize = 2, metrics = Some(m2))
-    assert(m2.docsIn.value == nDocs - doneDocs,
-      s"resume scored ${m2.docsIn.value}, expected ${nDocs - doneDocs}")
+    spark.listenerManager.register(ql)
+    try {
+      ResumableRunner.run(pages, s"$base/out", s"$base/lin", "scan",
+        numChunks = 8, waveSize = 2)
+      TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(ql)
+
+    def isChunkFilter(p: LogicalPlan) = p match {
+      case Filter(cond, _) => cond.exists(_.isInstanceOf[XxHash64])
+      case _ => false
+    }
+    assert(plans.size == 4, s"expected one write per wave, got ${plans.size}")
+    plans.foreach { p =>
+      val scorers = p.collect { case m: MapPartitions => m }
+      assert(scorers.size == 1, p.treeString)
+      val below = scorers.head.child.collect { case f if isChunkFilter(f) => f }
+      assert(below.nonEmpty, s"no chunk filter below the scorer:\n${p.treeString}")
+      assert(p.collect { case f if isChunkFilter(f) => f }.size == below.size,
+        s"a chunk filter sits above the scorer:\n${p.treeString}")
+    }
+  }
+
+  test("a run of W waves submits exactly W Spark jobs; the lineage log submits none") {
+    val base = Files.createTempDirectory("graft_lineage5").toString
+    val pages = SynthPages.pages(spark, 800L)
+    val runJobs = jobsOf {
+      ResumableRunner.run(pages, s"$base/out", s"$base/lin", "jobs",
+        numChunks = 8, waveSize = 2)
+    }
+    assert(runJobs == 4, s"4 waves submitted $runJobs jobs")
+
+    val store = new LineageStore(spark, s"$base/lin")
+    val logJobs = jobsOf {
+      assert(store.completedChunks("jobs") == (0 until 8).toSet)
+      store.append(Seq(LineageRecord("other", 3, "done", 1L, 0L, 0L)))
+      assert(store.completedChunks("other") == Set(3))
+    }
+    assert(logJobs == 0, s"lineage reads and commits submitted $logJobs jobs")
+  }
+
+  test("lineage counts are exact when every task's first attempt fails") {
+    val base = Files.createTempDirectory("graft_lineage6").toString
+    import spark.implicits._
+    // each attempt 0 fails after its last page, once every row has passed
+    // through the scorer and the observed counts
+    val flaky = SynthPages.pages(spark, 800L).mapPartitions { it =>
+      val first = TaskContext.get.attemptNumber() == 0
+      new Iterator[Page] {
+        def hasNext: Boolean = {
+          val more = it.hasNext
+          if (!more && first) throw new IllegalStateException("injected first-attempt failure")
+          more
+        }
+        def next(): Page = it.next()
+      }
+    }
+    val failed = new AtomicInteger
+    listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.reason != Success) failed.incrementAndGet()
+    }) {
+      ResumableRunner.run(flaky, s"$base/out", s"$base/lin", "retry",
+        numChunks = 8, waveSize = 4)
+    }
+    assert(failed.get > 0, "no task attempt failed: the injection did not fire")
+
+    val fromOutput = spark.read.parquet(s"$base/out").groupBy("chunk_id")
+      .agg(count(lit(1)), sum(col("keep").cast("long")))
+      .as[(Int, Long, Long)].collect().map { case (c, n, k) => c -> (n, k) }.toMap
+    val lineage = new LineageStore(spark, s"$base/lin").all().collect()
+    assert(lineage.length == 8)
+    lineage.foreach { r =>
+      assert((r.docs_in, r.docs_kept) == fromOutput.getOrElse(r.chunk_id, (0L, 0L)),
+        s"chunk ${r.chunk_id}")
+    }
+    assert(lineage.map(_.docs_in).sum == 800L)
+  }
+
+  test("the commit log is crash-safe") {
+    val base = Files.createTempDirectory("graft_lineage7").toString
+
+    // no lineage directory yet: nothing is complete
+    val none = new LineageStore(spark, s"$base/never")
+    assert(none.completedChunks("crash").isEmpty)
+    assert(none.all().collect().isEmpty)
+
+    val pages = SynthPages.pages(spark, 800L)
+    ResumableRunner.run(pages, s"$base/out", s"$base/lin", "crash",
+      numChunks = 8, waveSize = 2)
+    val lin = Paths.get(s"$base/lin")
+    def names = Files.list(lin).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.exists(_.endsWith(".crc")), s"no checksum files beside the commits: $names")
+
+    // a crash mid-commit leaves a hidden, torn temp file behind
+    Files.write(lin.resolve(".0-torn.json.tmp"), """{"run_id":"crash","chu""".getBytes)
+    val store = new LineageStore(spark, s"$base/lin")
+    assert(store.completedChunks("crash") == (0 until 8).toSet)
+    assert(store.all().collect().length == 8)
+
+    // a crash after a wave's write but before its commit: the wave's data is
+    // on disk and its chunks re-run on resume, with no duplicate rows
+    Files.delete(lin.resolve(names.filter(n => n.endsWith(".json") && !n.startsWith(".")).min))
+    val lost = (0 until 8).toSet -- store.completedChunks("crash")
+    assert(lost.size == 2)
+    val rerun = ResumableRunner.run(pages, s"$base/out", s"$base/lin", "crash",
+      numChunks = 8, waveSize = 2)
+    assert(rerun.toSet == lost)
+    assert(store.completedChunks("crash") == (0 until 8).toSet)
+    val out = spark.read.parquet(s"$base/out")
+    assert(out.count() == 800L && out.select("url").distinct().count() == 800L)
   }
 
   test("metrics in lineage match the pipeline decisions") {
