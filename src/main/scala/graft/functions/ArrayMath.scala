@@ -139,6 +139,12 @@ object ArrayMath {
     ColumnShim.column(
       JaccardSetsExpr(ColumnShim.expr(a), ColumnShim.expr(b)))
 
+  /** |A∩B| / |A∪B|, and 0.0 for two empty sets: they share no element, so
+    * they are never a near-duplicate pair.
+    */
+  private def jaccard(hits: Int, union: Int): Double =
+    if (union == 0) 0.0 else hits.toDouble / union
+
   def jaccardLongSets(a: ArrayData, b: ArrayData): Double = {
     val (na, nb) = (a.numElements(), b.numElements())
     val (s, g) = if (na <= nb) (a, b) else (b, a)
@@ -164,7 +170,7 @@ object ArrayMath {
       i += 1
     }
     if (sNull && gNull) hits += 1
-    hits.toDouble / (na + nb - hits)
+    jaccard(hits, na + nb - hits)
   }
 
   /** Comparator-sorted probe for string sets — NOT dispatched by
@@ -200,7 +206,7 @@ object ArrayMath {
       i += 1
     }
     if (sNull && gNull) hits += 1
-    hits.toDouble / (na + nb - hits)
+    jaccard(hits, na + nb - hits)
   }
 
   /** Hash-probe twin of [[jaccardStringSets]]: identical hits count and
@@ -249,7 +255,7 @@ object ArrayMath {
       i += 1
     }
     if (sNull && gNull) hits += 1
-    hits.toDouble / (na + nb - hits)
+    jaccard(hits, na + nb - hits)
   }
 
   private val XxSeed = 42L // spark.sql.functions.xxhash64's fixed seed
@@ -293,10 +299,10 @@ object ArrayMath {
 /** Exact Jaccard over two distinct-element set arrays (long or string
   * elements — the shingle-hash and token-set verify shapes). Null when
   * either side is null (standard null-intolerant binary expression).
-  * Two EMPTY sets yield NaN where the ANSI size algebra would have
-  * thrown DIVIDE_BY_ZERO — unreachable at every call site (sets are
-  * filtered `size > 0` before any pairing), and total-never-throws is
-  * the safer contract for the unreachable case.
+  * Two EMPTY sets yield 0.0: they share no element, so they are never a
+  * near-duplicate pair at any threshold (the ANSI size algebra would
+  * throw DIVIDE_BY_ZERO there). Every call site also filters `size > 0`
+  * before pairing.
   */
 case class JaccardSetsExpr(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {

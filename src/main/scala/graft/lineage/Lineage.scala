@@ -3,7 +3,12 @@ package graft.lineage
 import java.io.{FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
+import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import scala.io.Source
 
 import com.fasterxml.jackson.databind.json.JsonMapper
@@ -21,7 +26,10 @@ import graft.pipeline.QualityPipeline
   * (`small_model_inference/small_model_inference.py:106-114`,
   * `fineweb/big_inference.py:296-309`, `shard_manager.py:19-26`). Here each
   * wave of chunks is one Spark job, the annotate + partitioned write, and the
-  * calling process then commits one lineage file for the wave:
+  * calling process then commits one lineage file for the wave. Two waves are
+  * in flight at once, so the next wave's planning and tasks fill the cores
+  * that a draining wave leaves idle; commits still land one wave at a time,
+  * in wave order, each after its own write succeeded:
   *
   *  1. the write carries a `Dataset.observe` of `docs_in`/`docs_kept` per
   *     chunk. The write is a result stage, so only successful task attempts
@@ -83,7 +91,7 @@ final class LineageStore(spark: SparkSession, path: String) {
     */
   def append(records: Seq[LineageRecord]): Unit = {
     val fs = this.fs
-    val name = f"${System.currentTimeMillis()}%013d-${UUID.randomUUID()}.json"
+    val name = f"${LineageStore.nextStamp()}%013d-${UUID.randomUUID()}.json"
     val tmp = new Path(dir, s".$name.tmp")
     val out = fs.create(tmp, false)
     try records.foreach { r =>
@@ -99,6 +107,15 @@ final class LineageStore(spark: SparkSession, path: String) {
 
 private object LineageStore {
   val Json: JsonMapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  private val lastStamp = new AtomicLong
+
+  /** Epoch milliseconds, strictly increasing within this process, so that
+    * commit names sort in commit order even when two commits land in the
+    * same millisecond.
+    */
+  def nextStamp(): Long =
+    lastStamp.updateAndGet(prev => math.max(prev + 1, System.currentTimeMillis()))
 
   /** Commit files only: hidden and `_` names are in-flight temp files or
     * filesystem side files such as `LocalFileSystem`'s `.crc` checksums.
@@ -118,8 +135,15 @@ object ResumableRunner {
   /** Runs the quality pipeline chunk-wave by chunk-wave with lineage
     * checkpointing. Returns the chunk ids processed in THIS invocation.
     *
-    * @param failAfterWaves if set, throws [[SimulatedFailure]] after that
-    *                       many completed waves (test hook).
+    * Two waves are in flight at once: wave i+1 is planned and its write
+    * submitted while wave i's tasks drain. Waves are committed in wave
+    * order, each only after its own write succeeded. When a wave fails,
+    * the runner waits for the wave still in flight, commits nothing more
+    * and rethrows the failure; no Spark job outlives the call.
+    *
+    * @param failAfterWaves if set, waves from that index on never start,
+    *                       and [[SimulatedFailure]] is thrown once the
+    *                       earlier waves are committed (test hook).
     */
   def run(
       pages: Dataset[Page],
@@ -145,19 +169,19 @@ object ResumableRunner {
     // partition and this filter prunes files instead of rows.
     def chunkId = pmod(xxhash64(col("url")), lit(numChunks)).cast("int")
 
-    val processed = scala.collection.mutable.ArrayBuffer.empty[Int]
-    remaining.grouped(waveSize).zipWithIndex.foreach { case (wave, waveIdx) =>
-      failAfterWaves.foreach { k =>
-        if (waveIdx >= k) throw new SimulatedFailure(
-          s"injected failure before wave $waveIdx (processed ${processed.size} chunks)")
-      }
+    /** One wave's annotate + partitioned write; returns the observed
+      * `in_<c>`/`kept_<c>` counts of its chunks.
+      */
+    def write(wave: Seq[Int]): Map[String, Any] = {
       val obs = Observation()
       val counts = wave.flatMap { c =>
         val inChunk = col("chunk_id") === c
         Seq(count_if(inChunk).as(s"in_$c"), count_if(inChunk && col("keep")).as(s"kept_$c"))
       }
       // idempotent per-chunk overwrite: re-running a chunk replaces exactly
-      // its own partition directories, never duplicates
+      // its own partition directories, never duplicates. Two waves' chunks
+      // are disjoint and each dynamic-overwrite job stages under its own
+      // `.spark-staging-<jobId>`, so two waves may write at once.
       QualityPipeline.annotate(pages.filter(chunkId.isin(wave: _*)), th)
         .withColumn("chunk_id", chunkId)
         .observe(obs, counts.head, counts.tail: _*)
@@ -165,12 +189,39 @@ object ResumableRunner {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("chunk_id")
         .parquet(outDir)
-      val seen = obs.get
-      def n(key: String) = seen(key).asInstanceOf[Long]
-      val now = System.currentTimeMillis()
-      store.append(wave.map(c => LineageRecord(runId, c, "done", n(s"in_$c"), n(s"kept_$c"), now)))
-      processed ++= wave
+      obs.get
     }
-    processed.toSeq
+
+    val waves = remaining.grouped(waveSize).toVector
+    val started = failAfterWaves.fold(waves.size)(math.min(_, waves.size))
+    // Created here, not shared: a new thread copies the caller's Spark local
+    // properties (job group, scheduler pool) when it is created, so the
+    // waves' jobs are attributed as if the caller had submitted them.
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val inFlight = mutable.Queue.empty[Future[Map[String, Any]]]
+    def submit(i: Int): Unit = if (i < started) inFlight.enqueue(Future(write(waves(i))))
+    try {
+      submit(0)
+      submit(1)
+      for (i <- 0 until started) {
+        val seen = Await.result(inFlight.head, Duration.Inf)
+        inFlight.dequeue()
+        def n(key: String) = seen(key).asInstanceOf[Long]
+        val now = System.currentTimeMillis()
+        store.append(waves(i).map(c =>
+          LineageRecord(runId, c, "done", n(s"in_$c"), n(s"kept_$c"), now)))
+        submit(i + 2)
+      }
+    } finally {
+      // a failed wave or commit leaves its sibling running: let it finish
+      // (uncommitted) so that no job outlives this call
+      inFlight.foreach(Await.ready(_, Duration.Inf))
+      pool.shutdown()
+    }
+    val processed = waves.take(started).flatten
+    if (started < waves.size) throw new SimulatedFailure(
+      s"injected failure before wave $started (processed ${processed.size} chunks)")
+    processed
   }
 }

@@ -22,8 +22,10 @@ object Scrub {
   val PhoneToken = "<PHONE>"
   val SlurToken = "<SLUR>"
 
-  /** Conservative email shape; `(?<![\w.+-])`/lookahead keep it anchored so
-    * already-scrubbed text can't partially re-match.
+  /** Conservative email shape. It has no anchors or lookarounds, and every
+    * character it matches is in `[A-Za-z0-9._%+@-]`: [[ScrubScalar]]
+    * matches it only inside runs of those characters. The `<EMAIL>` token
+    * has no '@', so scrubbed text never re-matches.
     */
   val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9-]+(\\.[A-Za-z0-9-]+)*\\.[A-Za-z]{2,}"
 

@@ -11,7 +11,8 @@ import java.util.regex.Pattern
   * Perf: one String materialization per doc (vs one per regexp expression),
   * plus necessary-condition guards — '@' for emails, digits for phones/CNPs,
   * a lexicon-stem scan for slurs — that skip the regex entirely on the
-  * (majority) clean docs.
+  * (majority) clean docs. The email regex runs only over the runs of
+  * email characters around each '@'.
   */
 object ScrubScalar {
 
@@ -44,6 +45,46 @@ object ScrubScalar {
     false
   }
 
+  private def isEmailChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') ||
+      c == '.' || c == '_' || c == '%' || c == '+' || c == '-' || c == '@'
+
+  /** Start and end of every email match in `s`, flattened. The email
+    * pattern has no anchors or lookarounds and every character it matches
+    * is an [[isEmailChar]], so each match lies inside one maximal run of
+    * those characters that holds an '@', and matching inside each such run
+    * finds exactly the matches of a full-text scan. The full-text scan
+    * backtracks through every word of the doc.
+    */
+  private def emailSpans(s: String): Array[Int] = {
+    val spans = Array.newBuilder[Int]
+    val m = emailP.matcher(s)
+    var at = s.indexOf('@')
+    while (at >= 0) {
+      var a = at
+      while (a > 0 && isEmailChar(s.charAt(a - 1))) a -= 1
+      var b = at + 1
+      while (b < s.length && isEmailChar(s.charAt(b))) b += 1
+      m.region(a, b)
+      while (m.find()) { spans += m.start(); spans += m.end() }
+      at = s.indexOf('@', b)
+    }
+    spans.result()
+  }
+
+  /** `s` with each span of `spans` replaced by `token`. */
+  private def replaceSpans(s: String, spans: Array[Int], token: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    var last = 0
+    var i = 0
+    while (i < spans.length) {
+      sb.append(s, last, spans(i)).append(token)
+      last = spans(i + 1)
+      i += 2
+    }
+    sb.append(s, last, s.length).toString
+  }
+
   private def count(p: Pattern, s: String): Int = {
     val m = p.matcher(s)
     var c = 0
@@ -68,13 +109,14 @@ object ScrubScalar {
     // case-insensitive substring check; falls through to the real regex
     val maybeSlur = containsUleIgnoreCase(text)
 
-    val nEmails = if (hasAt) count(emailP, text) else 0
+    val emails = if (hasAt) emailSpans(text) else Array.emptyIntArray
+    val nEmails = emails.length / 2
     val nPhones = if (hasDigit) count(phoneP, text) else 0
     val nCnps = if (hasDigit) CnpScrubber.count(text) else 0
     val nSlurs = if (maybeSlur) count(slurP, text) else 0
 
     var out = text
-    if (nEmails > 0) out = emailP.matcher(out).replaceAll(Scrub.EmailToken)
+    if (nEmails > 0) out = replaceSpans(out, emails, Scrub.EmailToken)
     if (nPhones > 0) out = phoneP.matcher(out).replaceAll(Scrub.PhoneToken)
     if (nSlurs > 0) out = slurP.matcher(out).replaceAll(Scrub.SlurToken)
     if (nCnps > 0) out = CnpScrubber.scrub(out)

@@ -1,6 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -127,11 +132,8 @@ class ArrayMathParitySpec extends AnyFunSuite {
         .map(identity)
       (set(i, 3 + i % 20), set(i + 7, 3 + (i * 3) % 20))
     } ++ Seq((Seq.empty[Long], Seq(1L, 2L)), (Seq(5L), Seq(5L)))
-    // NOT tested: (empty, empty) — the ANSI algebra THROWS on its 0/0
-    // while the native returns NaN; both-empty pairs are unreachable in
-    // every call site (sets are filtered size > 0 before pairing), and a
-    // total function is the safer behavior for the unreachable case —
-    // divergence documented on JaccardSetsExpr.
+    // (empty, empty) is left out here: the ANSI algebra THROWS on its 0/0,
+    // and the native's 0.0 is pinned by the test below
     val ldf = longs.toDF("a", "b")
     val algebra = {
       val i = size(array_intersect(col("a"), col("b")))
@@ -158,6 +160,23 @@ class ArrayMathParitySpec extends AnyFunSuite {
         java.lang.Double.doubleToRawLongBits(r.getDouble(1)),
         s"str row $i: ${r.getDouble(0)} vs ${r.getDouble(1)}")
     }
+  }
+
+  test("jaccard_sets(∅, ∅) = 0.0 for long and string elements, " +
+      "interpreted and codegen") {
+    val empty = new GenericArrayData(Array.empty[Any])
+    val row = InternalRow(empty, empty)
+    Seq(LongType, StringType).foreach { t =>
+      val e = JaccardSetsExpr(BoundReference(0, ArrayType(t), nullable = true),
+        BoundReference(1, ArrayType(t), nullable = true))
+      assert(e.eval(row) == 0.0, s"$t interpreted")
+      assert(GenerateUnsafeProjection.generate(Seq(e)).apply(row).getDouble(0) == 0.0,
+        s"$t codegen")
+    }
+    assert(ArrayMath.jaccardStringSets(empty, empty) == 0.0)
+    // one empty side is 0/|B| = 0.0 as before
+    val one = new GenericArrayData(Array[Any](1L))
+    assert(ArrayMath.jaccardLongSets(empty, one) == 0.0)
   }
 
   test("xx64 equals Spark's xxhash64 on strings") {

@@ -1,13 +1,15 @@
 package graft.lineage
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.{Success, TaskContext, TestBus}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.catalyst.expressions.XxHash64
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, MapPartitions}
 import org.apache.spark.sql.execution.QueryExecution
@@ -37,20 +39,35 @@ class LineageSpec extends AnyFunSuite {
     finally sc.removeSparkListener(l)
   }
 
-  /** Spark jobs that `body` submits from this thread. */
-  private def jobsOf(body: => Unit): Int = {
+  /** Spark jobs that `body` submits from this thread, or from threads it
+    * starts, and how many of them had not ended when `body` returned or
+    * threw (counted once the listener bus is drained).
+    */
+  private def scopedJobs(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val (key, tag) = ("graft.test.scope", java.util.UUID.randomUUID().toString)
-    val jobs = new AtomicInteger
+    val started = ConcurrentHashMap.newKeySet[Int]()
+    val ended = ConcurrentHashMap.newKeySet[Int]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty(key) == tag)
-          jobs.incrementAndGet()
+          started.add(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
     }
+    val open = new AtomicInteger(-1)
     sc.setLocalProperty(key, tag)
-    try listening(l)(body) finally sc.setLocalProperty(key, null)
-    jobs.get
+    try listening(l) {
+      try body
+      finally {
+        TestBus.drain(sc)
+        open.set(started.asScala.count(j => !ended.contains(j)))
+      }
+    } finally sc.setLocalProperty(key, null)
+    (started.size, open.get)
   }
+
+  /** Spark jobs that `body` submits from this thread. */
+  private def jobsOf(body: => Unit): Int = scopedJobs(body)._1
 
   test("killed run resumes at partition granularity; output equals single run") {
     val base = Files.createTempDirectory("graft_lineage").toString
@@ -229,5 +246,76 @@ class LineageSpec extends AnyFunSuite {
     val expected = graft.pipeline.QualityPipeline
       .annotate(pages).filter(_.keep).count()
     assert(keptTotal == expected)
+  }
+
+  test("a wave that fails while its sibling is in flight commits neither; " +
+      "resume re-runs both without duplicates") {
+    val base = Files.createTempDirectory("graft_lineage8").toString
+    import spark.implicits._
+    val pages = SynthPages.pages(spark, 800L)
+    // rows of wave 0 (chunks 0 and 1) fail on every attempt. The chunk
+    // filter is pushed below this projection, so wave 1 (chunks 2 and 3),
+    // submitted beside wave 0, reads none of them and writes its output
+    val chunk = pmod(xxhash64(col("url")), lit(8))
+    val failing = pages.withColumn("text",
+      when(chunk.isin(0, 1), raise_error(lit("injected wave-0 failure")))
+        .otherwise(col("text"))).as[Page]
+    val (jobs, open) = scopedJobs {
+      val e = intercept[Exception] {
+        ResumableRunner.run(failing, s"$base/out", s"$base/lin", "sib",
+          numChunks = 8, waveSize = 2)
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains("injected wave-0")), e)
+    }
+    assert(jobs == 2, s"waves 2 and 3 must not start: $jobs jobs")
+    assert(open == 0, s"$open jobs outlived the failed run")
+    val store = new LineageStore(spark, s"$base/lin")
+    assert(store.completedChunks("sib").isEmpty)
+    val landed = spark.read.parquet(s"$base/out").select("chunk_id").distinct()
+      .as[Int].collect().toSet
+    assert(landed == Set(2, 3), s"the sibling's write landed uncommitted: $landed")
+
+    val rerun = ResumableRunner.run(pages, s"$base/out", s"$base/lin", "sib",
+      numChunks = 8, waveSize = 2)
+    assert(rerun == (0 until 8))
+    val out = spark.read.parquet(s"$base/out")
+    assert(out.count() == 800L && out.select("url").distinct().count() == 800L)
+    assert(store.all().collect().map(_.docs_in).sum == 800L)
+  }
+
+  test("failAfterWaves = k submits exactly k write jobs and commits k waves") {
+    val base = Files.createTempDirectory("graft_lineage9").toString
+    val pages = SynthPages.pages(spark, 800L)
+    Seq(0, 1, 2, 3).foreach { k =>
+      val (jobs, open) = scopedJobs {
+        intercept[SimulatedFailure] {
+          ResumableRunner.run(pages, s"$base/out$k", s"$base/lin$k", "k",
+            numChunks = 8, waveSize = 2, failAfterWaves = Some(k))
+        }
+      }
+      assert(jobs == k, s"failAfterWaves = $k submitted $jobs jobs")
+      assert(open == 0, s"failAfterWaves = $k: $open jobs outlived the run")
+      assert(new LineageStore(spark, s"$base/lin$k").completedChunks("k") ==
+        (0 until 2 * k).toSet, s"failAfterWaves = $k")
+    }
+  }
+
+  test("commit files land in wave order, and no job outlives the run") {
+    val base = Files.createTempDirectory("graft_lineage10").toString
+    val pages = SynthPages.pages(spark, 800L)
+    val (jobs, open) = scopedJobs {
+      ResumableRunner.run(pages, s"$base/out", s"$base/lin", "order",
+        numChunks = 8, waveSize = 2)
+    }
+    assert(jobs == 4 && open == 0, s"jobs=$jobs open=$open")
+    val commits = Files.list(Paths.get(s"$base/lin")).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(n => n.endsWith(".json") && !n.startsWith(".")).toSeq.sorted
+    val waves = commits.map { n =>
+      Files.readAllLines(Paths.get(s"$base/lin", n)).asScala.filter(_.nonEmpty)
+        .map(LineageStore.Json.readValue(_, classOf[LineageRecord]).chunk_id).toSet
+    }
+    assert(waves == Seq(Set(0, 1), Set(2, 3), Set(4, 5), Set(6, 7)), s"$commits")
   }
 }
